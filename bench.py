@@ -3,7 +3,8 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Run directly: ``python bench.py``. Environment knobs:
+Run directly: ``python bench.py``. Session, evaluator and the
+warm-up/min-of-2 loop come from ``harness.py``. Environment knobs:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[] parallelism (default 32)
   BENCH_QUERIES       comma-separated subset to run (default headline set)
@@ -14,12 +15,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+import harness  # noqa: E402
+
+SF_DIR = harness.SF_DIR
 
 #: The scan/join/agg-heavy queries that dominate engine cost. Cheap
 #: point lookups are excluded: they measure session overhead, not the
@@ -238,8 +239,8 @@ HEADLINE = [
 #: changes, re-pin here AND reset its BASELINE.md record.
 # Round-7 note: the per-row FORCE_ALL_COLUMNS allowlist is gone — the
 # all-columns hash aggregate is now the DEFAULT evaluator for every
-# non-top-k row (see run()), because the count() evaluator was found
-# to let Catalyst prune joins (triangles/funnel), windows (as-of,
+# non-top-k row (see harness.evaluate), because the count() evaluator
+# was found to let Catalyst prune joins (triangles/funnel), windows (as-of,
 # scd2, gini) and aggregate measures (q1's 7 decimal sums) — an
 # allowlist can only ever chase that class row by row.
 
@@ -296,101 +297,27 @@ def _extra_queries():
             "text_dup_spans_xxhash64": dup_spans_xxhash64}
 
 
-def main() -> None:
-    from twitter_analysis_spark.session import get_spark
+def rows() -> dict:
+    """Row name -> query builder for this run: the BENCH_QUERIES subset,
+    else every HEADLINE row (catalog queries and the bench-only twins)."""
     from twitter_analysis_spark import catalog
 
-    extra = _extra_queries()
+    fns = {**catalog.QUERIES, **_extra_queries()}
     names = os.environ.get("BENCH_QUERIES")
-    names = names.split(",") if names else [n for n in HEADLINE
-                                            if n in catalog.QUERIES
-                                            or n in extra]
+    names = names.split(",") if names else [n for n in HEADLINE if n in fns]
+    return {n: fns[n] for n in names}
 
-    # Status-store retention is trimmed hard: even with the UI off,
-    # AppStatusListener + SQLAppStatusListener retain per-execution
-    # plan graphs and per-task metric rows (defaults: 1000 executions /
-    # 1000 stages / 100k tasks). Over the ~70 plan executions of a
-    # warmup+timed run that accumulation degrades the JVM enough to
-    # inflate late heavy queries ~2x (measured: dedup_minhash_lsh
-    # 6.9s isolated vs 14.2s as query 17 of a stock-config pass).
-    spark = get_spark(app_name="bench", master=f"local[{CPUS}]",
-                      extra_conf={"spark.driver.memory": "16g",
-                                  "spark.ui.enabled": "false",
-                                  "spark.sql.ui.retainedExecutions": "2",
-                                  "spark.ui.retainedJobs": "20",
-                                  "spark.ui.retainedStages": "50",
-                                  "spark.ui.retainedTasks": "500",
-                                  "spark.ui.dagGraph.retainedRootRDDs": "10",
-                                  "spark.cleaner.periodicGC.interval": "30s"})
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm_system = spark.sparkContext._jvm.System
 
+def main() -> None:
+    fns = rows()
+    spark = harness.session("bench")
 
     def run(name: str) -> None:
-        from pyspark.sql import functions as F
+        harness.evaluate(fns[name](spark, SF_DIR), name)
 
-        df = (extra[name] if name in extra
-              else catalog.QUERIES[name])(spark, SF_DIR)
-        if name.startswith(("t1", "t6", "flagship", "q3", "a2", "sim")):
-            # top-k rows: collecting the (bounded) result is already a
-            # full, honest evaluation — and what a caller would do.
-            df.collect()
-        else:
-            # EVERY other row evaluates through the all-columns hash
-            # aggregate (round-7 re-basing): a bare count() lets
-            # Catalyst drop provably-unique-side joins, projection-
-            # only windows, aggregate measure expressions, and the
-            # scan columns that feed them — q1's "record" turned out
-            # to time a 3-column distinct, not its 7 decimal sums.
-            # Hashing every output column makes the entire plan
-            # load-bearing; bit_xor, not sum, because ANSI mode makes
-            # a long-sum of hashes overflow-fatal and xor forces
-            # evaluation just as well. One long per row to the
-            # aggregate, no wide collect.
-            (df.select(F.xxhash64(*[F.col(c) for c in df.columns])
-                       .alias("h")).agg(F.expr("bit_xor(h)")).collect())
-        # Operators that persist() intermediates (LSH candidate sets)
-        # would otherwise accumulate storage across the session and
-        # skew later timings by 2-3x. NOTE (r15 ADVICE): clearCache()
-        # does NOT release localCheckpoint blocks (minhash banded/cand
-        # barriers) — those free when the ContextCleaner GCs the result
-        # frame, which the per-query System.gc() below plus
-        # spark.cleaner.periodicGC.interval=30s keep bounded.
-        spark.catalog.clearCache()
+    timings = {name: r["min_sec"]
+               for name, r in harness.best_of(spark, list(fns), run).items()}
 
-    # Untimed warmup pass: loads classes + whole-stage codegen compiles
-    # each plan shape once, so the timed pass measures the engine, not
-    # JIT/classloader cold start (first-run inflation is ~10x).
-    for name in names:
-        run(name)
-
-    # Full GC between timed queries (OUTSIDE the timers): broadcast /
-    # accumulator blocks are only reclaimed when the driver GCs, and
-    # the driver's 16g heap otherwise never fills enough to trigger
-    # one — each query then pays earlier queries' garbage instead of
-    # its own plan. Harness hygiene, not engine time.
-    #
-    # Two timed passes, per-query MIN: single-pass timings on this
-    # box swing ±50% run-to-run with zero code change (A/B-verified
-    # against pinned commits), and min-of-N is the standard
-    # noise-floor estimator — the engine can't run FASTER than its
-    # true cost, so the minimum is the measurement least polluted by
-    # transient machine state.
-    timings: dict[str, float] = {}
-    jvm_system.gc()
-    for _pass in range(2):
-        for name in names:
-            t0 = time.perf_counter()
-            run(name)
-            elapsed = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, elapsed), elapsed)
-            jvm_system.gc()
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
     # Machine-checkable drift normalization (BASELINE.md): geometric
     # mean of measured/record over the pinned unchanged-code controls.
     # A factor of ~1.0 means this box matches the record box; divide
@@ -465,7 +392,7 @@ def main() -> None:
         "control_factor": control_factor,
         "control_spread": control_spread,
         "regressions": regressions,
-        "sf": sf_val,
+        "sf": harness.sf_value(),
     }
     # Full per-query artifact goes to a sidecar file; the printed line
     # must stay well under the driver's ~2000-char stdout capture (the

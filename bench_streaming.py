@@ -9,7 +9,7 @@ What is measured: wall time for an ``availableNow`` drain of the whole
 drop dir into a memory sink — the batch-equivalent workload the
 streaming engine would spread over a day of micro-batches. Each shape
 gets an untimed warmup drain (classload + codegen) and the timed run
-uses min-of-2, mirroring bench.py methodology.
+uses min-of-2, through the same loop as bench.py (harness.best_of).
 
 Inputs are materialized once per run from the standard test data:
   - events.parquet (sf dir, 100k rows at sf0.1) -> JSONL drop files,
@@ -22,21 +22,24 @@ Environment knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (as bench.py).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                 "tests", "fixtures"))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+import harness  # noqa: E402
+
+SF_DIR = harness.SF_DIR
 N_TWEETS = 20_000
 N_DROP_FILES = 8          # simulate several micro-batch arrivals
+EVENT_SCHEMA = ("event_id LONG, ts TIMESTAMP, user_id LONG, "
+                "event_type STRING, value DOUBLE")
 
 
 def _prep_event_drop(spark, root: str) -> str:
@@ -71,39 +74,29 @@ def _prep_tweet_drop(root: str) -> str:
 
 
 def main() -> None:
-    from twitter_analysis_spark.session import get_spark
+    from pyspark.sql import functions as F
+
+    from twitter_analysis_spark.sources.io import load_table
+    from twitter_analysis_spark.sources.maintenance import (
+        compact_parquet, fold_index_bucketed)
     from twitter_analysis_spark.streaming import joins as SJ
     from twitter_analysis_spark.streaming import sessionize as SS
+    from twitter_analysis_spark.streaming.ingest import (
+        streaming_ingest_decontaminate, streaming_ingest_dedup,
+        streaming_ingest_neardup)
     from twitter_analysis_spark.streaming.keyword_counts import (
-        streaming_keyword_counts,
-    )
+        streaming_keyword_counts)
+    from twitter_analysis_spark.streaming.rollup_ingest import (
+        streaming_anomaly_alerts, streaming_rollup_ingest)
+    from twitter_analysis_spark.streaming.sketch_ingest import (
+        streaming_sketch_ingest)
 
-    spark = get_spark(app_name="bench_streaming", master=f"local[{CPUS}]",
-                      extra_conf={"spark.driver.memory": "16g",
-                                  "spark.ui.enabled": "false",
-                                  "spark.sql.ui.retainedExecutions": "2"})
-    spark.sparkContext.setLogLevel("ERROR")
-
-    jvm_system = spark.sparkContext._jvm.System
-
-    def scrub() -> None:
-        # Same session hygiene as bench.py, OUTSIDE every timer: drop
-        # stray cached blocks and force a driver GC so each drain pays
-        # its own garbage, not earlier shapes'. Without this the
-        # late-running heavy rows (rollup family, neardup steady
-        # drains) read 2-3x their isolated cost in-sweep — the r12
-        # false-breach signature (in-sweep 18.0/22.3 vs isolated
-        # 12.5/10.9 on an idle box). Disk state (lakes, indexes,
-        # checkpoints) is untouched, so the steady-state sections
-        # still measure exactly the incremental economics.
-        spark.catalog.clearCache()
-        jvm_system.gc()
+    spark = harness.session("bench_streaming")
 
     root = tempfile.mkdtemp(prefix="bench_streaming_")
     ev_drop = _prep_event_drop(spark, root)
     tw_drop = _prep_tweet_drop(root)
 
-    from twitter_analysis_spark.sources.io import load_table
     doc_drop = os.path.join(root, "docs_drop")
     (load_table(spark, SF_DIR, "documents").select("doc_id", "text")
      .coalesce(N_DROP_FILES).write.mode("overwrite").json(doc_drop))
@@ -111,9 +104,6 @@ def main() -> None:
     def ingest_run(tag: str) -> None:
         # fresh corpus/index/checkpoint per run: each drain ingests the
         # whole drop against an initially-empty index
-        from twitter_analysis_spark.streaming.ingest import (
-            streaming_ingest_dedup,
-        )
         base = os.path.join(root, f"ingest_{tag}")
         streaming_ingest_dedup(
             spark, doc_drop,
@@ -124,9 +114,6 @@ def main() -> None:
     def neardup_run(tag: str) -> None:
         # near-dup analogue: band-index probe + exact-Jaccard verify
         # per micro-batch (streaming/ingest.py:streaming_ingest_neardup)
-        from twitter_analysis_spark.streaming.ingest import (
-            streaming_ingest_neardup,
-        )
         base = os.path.join(root, f"neardup_{tag}")
         streaming_ingest_neardup(
             spark, doc_drop,
@@ -137,9 +124,6 @@ def main() -> None:
     def rollup_run(tag: str) -> None:
         # streamed rollup maintenance: id-dedup raw append + partition-
         # scoped recompute per micro-batch (streaming/rollup_ingest.py)
-        from twitter_analysis_spark.streaming.rollup_ingest import (
-            streaming_rollup_ingest,
-        )
         base = os.path.join(root, f"rollup_{tag}")
         streaming_rollup_ingest(
             spark, ev_drop,
@@ -147,16 +131,12 @@ def main() -> None:
             index_path=os.path.join(base, "index"),
             rollup_path=os.path.join(base, "rollup"),
             grain="hour",
-            schema=("event_id LONG, ts TIMESTAMP, user_id LONG, "
-                    "event_type STRING, value DOUBLE"),
+            schema=EVENT_SCHEMA,
             checkpoint=os.path.join(base, "ckpt"))
 
     def alerts_run(tag: str) -> None:
         # rollup ingest + trailing z-score detection + alert dedupe
         # per micro-batch (streaming/rollup_ingest.py)
-        from twitter_analysis_spark.streaming.rollup_ingest import (
-            streaming_anomaly_alerts,
-        )
         base = os.path.join(root, f"alerts_{tag}")
         streaming_anomaly_alerts(
             spark, ev_drop,
@@ -164,8 +144,7 @@ def main() -> None:
             index_path=os.path.join(base, "index"),
             rollup_path=os.path.join(base, "rollup"),
             alerts_path=os.path.join(base, "alerts"),
-            schema=("event_id LONG, ts TIMESTAMP, user_id LONG, "
-                    "event_type STRING, value DOUBLE"),
+            schema=EVENT_SCHEMA,
             checkpoint=os.path.join(base, "ckpt"))
 
     def decon_run(tag: str) -> None:
@@ -174,10 +153,6 @@ def main() -> None:
         # (streaming/ingest.py:streaming_ingest_decontaminate). The
         # doc_id%97 slice stands in for the benchmark, as in the
         # text_decontaminate catalog row.
-        from twitter_analysis_spark.streaming.ingest import (
-            streaming_ingest_decontaminate,
-        )
-        import pyspark.sql.functions as F
         base = os.path.join(root, f"decon_{tag}")
         bench = (load_table(spark, SF_DIR, "documents")
                  .where(F.col("doc_id") % 97 == 0)
@@ -191,9 +166,6 @@ def main() -> None:
     def sketch_run(tag: str) -> None:
         # continuously-maintained Count-Min sketch: constant-size state
         # merged per micro-batch (streaming/sketch_ingest.py)
-        from twitter_analysis_spark.streaming.sketch_ingest import (
-            streaming_sketch_ingest,
-        )
         base = os.path.join(root, f"sketch_{tag}")
         streaming_sketch_ingest(
             spark, doc_drop,
@@ -239,15 +211,20 @@ def main() -> None:
         "stream_sketch_ingest": sketch_run,
     }
 
-    timings: dict[str, float] = {}
-    for name, fn in shapes.items():
-        fn(f"{name}_warm")                         # untimed warmup
-        for p in range(2):
-            scrub()
-            t0 = time.perf_counter()
-            fn(f"{name}_t{p}")
-            el = round(time.perf_counter() - t0, 3)
-            timings[name] = min(timings.get(name, el), el)
+    # One shape at a time (warm-up, then its timed drains), each timed
+    # drain after harness.scrub: without the scrub the late-running
+    # heavy rows (rollup family, neardup steady drains) read 2-3x their
+    # isolated cost in-sweep — the r12 false-breach signature (in-sweep
+    # 18.0/22.3 vs isolated 12.5/10.9 on an idle box). Disk state
+    # (lakes, indexes, checkpoints) is untouched, so the steady-state
+    # sections below still measure exactly the incremental economics.
+    tags = itertools.count()
+
+    def run(name: str) -> None:
+        shapes[name](f"{name}_{next(tags)}")
+
+    timings = {name: harness.best_of(spark, [name], run)[name]["min_sec"]
+               for name in shapes}
 
     # Steady-state economics (BASELINE.md round-6 note: unshowable in
     # a single drain, where one batch touching every date IS a full
@@ -259,76 +236,64 @@ def main() -> None:
     # RATIO is the signal, not the absolute number); correctness of
     # the only-touched-partitions rewrite is pinned separately in
     # tests/test_maintenance.py.
-    from pyspark.sql import functions as F
-    from twitter_analysis_spark.streaming.rollup_ingest import (
-        streaming_rollup_ingest,
-    )
+    def seed_drop(src: str, base: str) -> str:
+        """A fresh drop dir under ``base`` holding ``src``'s files."""
+        drop = os.path.join(base, "drop")
+        os.makedirs(drop, exist_ok=True)
+        for f in os.listdir(src):
+            if not f.startswith("_"):
+                shutil.copy(os.path.join(src, f), os.path.join(drop, f))
+        return drop
+
+    def write_late(drop: str, fname: str, records: list[dict]) -> None:
+        with open(os.path.join(drop, fname), "w") as fh:
+            fh.write("\n".join(json.dumps(r) for r in records) + "\n")
+
+    def once(key: str, fn, *args, **kwargs) -> None:
+        timings[key], _ = harness.timed(spark, fn, spark, *args, **kwargs)
+
     ss_base = os.path.join(root, "rollup_steady")
-    ss_drop = os.path.join(ss_base, "drop")
-    os.makedirs(ss_drop, exist_ok=True)
+    ss_drop = seed_drop(ev_drop, ss_base)
     ev = load_table(spark, SF_DIR, "events")
     last_day = ev.agg(F.max(F.to_date("ts"))).first()[0]  # 1-row collect
-    for f in os.listdir(ev_drop):
-        if not f.startswith("_"):
-            shutil.copy(os.path.join(ev_drop, f), os.path.join(ss_drop, f))
     ss_kwargs = dict(
         lake_path=os.path.join(ss_base, "lake"),
         index_path=os.path.join(ss_base, "index"),
         rollup_path=os.path.join(ss_base, "rollup"),
         grain="hour",
-        schema=("event_id LONG, ts TIMESTAMP, user_id LONG, "
-                "event_type STRING, value DOUBLE"),
+        schema=EVENT_SCHEMA,
         checkpoint=os.path.join(ss_base, "ckpt"))
     for n_drain in (1, 2, 3):
         if n_drain > 1:
             # a late micro-batch: 500 events, all on the last date
-            late = [json.dumps({
+            write_late(ss_drop, f"late{n_drain}.json", [{
                 "event_id": 10_000_000 * n_drain + i,
                 "ts": f"{last_day}T1{n_drain}:{i % 60:02d}:00.000Z",
                 "user_id": i % 97, "event_type": "late_click",
-                "value": 1.0}) for i in range(500)]
-            with open(os.path.join(ss_drop, f"late{n_drain}.json"),
-                      "w") as fh:
-                fh.write("\n".join(late) + "\n")
-        scrub()
-        t0 = time.perf_counter()
-        streaming_rollup_ingest(spark, ss_drop, **ss_kwargs)
-        timings[f"stream_rollup_steady_drain{n_drain}"] = round(
-            time.perf_counter() - t0, 3)
+                "value": 1.0} for i in range(500)])
+        once(f"stream_rollup_steady_drain{n_drain}",
+             streaming_rollup_ingest, ss_drop, **ss_kwargs)
 
     # Near-dup twin of the steady-state story: the persistent band
     # index makes a late micro-batch cost one (band, bh) equi-join
     # against the index — batch-proportional work — while drain 1
     # pays the full-corpus build. If drains 2-3 ever approach drain 1,
     # the index stopped doing its job (e.g. a corpus rescan crept in).
-    from twitter_analysis_spark.streaming.ingest import (
-        streaming_ingest_neardup,
-    )
     nd_base = os.path.join(root, "neardup_steady")
-    nd_drop = os.path.join(nd_base, "drop")
-    os.makedirs(nd_drop, exist_ok=True)
-    for f in os.listdir(doc_drop):
-        if not f.startswith("_"):
-            shutil.copy(os.path.join(doc_drop, f), os.path.join(nd_drop, f))
+    nd_drop = seed_drop(doc_drop, nd_base)
     nd_kwargs = dict(
         corpus_path=os.path.join(nd_base, "corpus"),
         band_index_path=os.path.join(nd_base, "index"),
         checkpoint=os.path.join(nd_base, "ckpt"))
     for n_drain in (1, 2, 3):
         if n_drain > 1:
-            late = [json.dumps({
+            write_late(nd_drop, f"late{n_drain}.json", [{
                 "doc_id": 10_000_000 * n_drain + i,
                 "text": f"late document {n_drain} {i} about spark "
-                        f"bands buckets and steady state economics"})
-                for i in range(200)]
-            with open(os.path.join(nd_drop, f"late{n_drain}.json"),
-                      "w") as fh:
-                fh.write("\n".join(late) + "\n")
-        scrub()
-        t0 = time.perf_counter()
-        streaming_ingest_neardup(spark, nd_drop, **nd_kwargs)
-        timings[f"stream_neardup_steady_drain{n_drain}"] = round(
-            time.perf_counter() - t0, 3)
+                        f"bands buckets and steady state economics"}
+                for i in range(200)])
+        once(f"stream_neardup_steady_drain{n_drain}",
+             streaming_ingest_neardup, nd_drop, **nd_kwargs)
 
     # Two-tier steady state (round 11): after
     # maintenance.fold_index_bucketed compacts the accumulated delta
@@ -342,18 +307,8 @@ def main() -> None:
     # the base probe added a per-trigger penalty. Zero-dup
     # correctness of exactly this sequence is pinned in
     # tests/test_maintenance.py's drain-fold-drain roundtrip.
-    from twitter_analysis_spark.sources.maintenance import (
-        fold_index_bucketed,
-    )
-    from twitter_analysis_spark.streaming.ingest import (
-        streaming_ingest_dedup,
-    )
     tt_base = os.path.join(root, "twotier_steady")
-    tt_drop = os.path.join(tt_base, "drop")
-    os.makedirs(tt_drop, exist_ok=True)
-    for f in os.listdir(doc_drop):
-        if not f.startswith("_"):
-            shutil.copy(os.path.join(doc_drop, f), os.path.join(tt_drop, f))
+    tt_drop = seed_drop(doc_drop, tt_base)
     tt_kwargs = dict(
         corpus_path=os.path.join(tt_base, "corpus"),
         index_path=os.path.join(tt_base, "index"),
@@ -362,30 +317,18 @@ def main() -> None:
     # drain 1 = the full single-tier build (same workload class as
     # stream_ingest_dedup, re-timed here so the triplet is
     # self-contained like the other steady-state triplets)
-    scrub()
-    t0 = time.perf_counter()
-    streaming_ingest_dedup(spark, tt_drop, **tt_kwargs)
-    timings["stream_ingest_twotier_drain1"] = round(
-        time.perf_counter() - t0, 3)
-    scrub()
-    t0 = time.perf_counter()
-    fold_index_bucketed(spark, tt_kwargs["index_path"], "bench_fold_base")
-    timings["stream_ingest_fold"] = round(time.perf_counter() - t0, 3)
+    once("stream_ingest_twotier_drain1",
+         streaming_ingest_dedup, tt_drop, **tt_kwargs)
+    once("stream_ingest_fold",
+         fold_index_bucketed, tt_kwargs["index_path"], "bench_fold_base")
     for n_drain in (2, 3):
-        late = [json.dumps({
+        write_late(tt_drop, f"late{n_drain}.json", [{
             "doc_id": 20_000_000 * n_drain + i,
             "text": f"two tier late doc {n_drain} {i} probing the "
-                    f"folded bucketed base"}) for i in range(200)]
-        with open(os.path.join(tt_drop, f"late{n_drain}.json"),
-                  "w") as fh:
-            fh.write("\n".join(late) + "\n")
-        scrub()
-        t0 = time.perf_counter()
-        streaming_ingest_dedup(spark, tt_drop,
-                               base_index_table="bench_fold_base",
-                               **tt_kwargs)
-        timings[f"stream_ingest_twotier_drain{n_drain}"] = round(
-            time.perf_counter() - t0, 3)
+                    f"folded bucketed base"} for i in range(200)])
+        once(f"stream_ingest_twotier_drain{n_drain}",
+             streaming_ingest_dedup, tt_drop,
+             base_index_table="bench_fold_base", **tt_kwargs)
     spark.sql("DROP TABLE IF EXISTS bench_fold_base")
 
     # Lake-compaction economics (round-8 verdict directive 6): the
@@ -399,43 +342,27 @@ def main() -> None:
     # batch-proportional maintenance a steady-state deployment
     # actually runs. Correctness of the partitioned layout + rewrite
     # is pinned in tests/test_maintenance.py; this records the cost.
-    from twitter_analysis_spark.sources.maintenance import compact_parquet
     lake = ss_kwargs["lake_path"]
-    scrub()
-    t0 = time.perf_counter()
-    compact_parquet(spark, lake, target_file_mb=128,
-                    partition_by=["event_date"])
-    timings["stream_compaction_steady_drain1"] = round(
-        time.perf_counter() - t0, 3)
+    once("stream_compaction_steady_drain1", compact_parquet, lake,
+         target_file_mb=128, partition_by=["event_date"])
     for n_drain in (2, 3):
-        late = [json.dumps({
+        write_late(ss_drop, f"late_c{n_drain}.json", [{
             "event_id": 20_000_000 * n_drain + i,
             "ts": f"{last_day}T0{n_drain}:{i % 60:02d}:00.000Z",
             "user_id": i % 89, "event_type": "late_compact",
-            "value": 1.0}) for i in range(500)]
-        with open(os.path.join(ss_drop, f"late_c{n_drain}.json"),
-                  "w") as fh:
-            fh.write("\n".join(late) + "\n")
+            "value": 1.0} for i in range(500)])
         streaming_rollup_ingest(spark, ss_drop, **ss_kwargs)  # untimed
         part_dir = os.path.join(lake, f"event_date={last_day}")
-        scrub()
-        t0 = time.perf_counter()
-        compact_parquet(spark, part_dir, target_file_mb=128)
-        timings[f"stream_compaction_steady_drain{n_drain}"] = round(
-            time.perf_counter() - t0, 3)
+        once(f"stream_compaction_steady_drain{n_drain}",
+             compact_parquet, part_dir, target_file_mb=128)
 
     shutil.rmtree(root, ignore_errors=True)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
     print(json.dumps({
         "metric": "streaming_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf_val,
+        "sf": harness.sf_value(),
     }))
 
 

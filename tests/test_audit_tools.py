@@ -1,5 +1,6 @@
-"""Unit pins for the round-15 audit tooling (tools/oracle_stability.py,
-tools/skew_bench.py): the pure helpers these tools' evidence rests on.
+"""Unit pins for the audit tooling (tools/oracle_stability.py,
+tools/skew_bench.py, tools/scale_probe.py): the pure helpers these
+tools' evidence rests on.
 The tools themselves are exercised by their recorded artifact runs
 (ORACLE_STABILITY_r15 / BENCH_SKEW_r15); these tests keep the helper
 semantics from rotting between runs.
@@ -73,3 +74,23 @@ def test_part_hist_reports_imbalance(spark):
     salted = df.withColumn("_s", F.pmod(F.xxhash64("id"), F.lit(8)))
     hs = sb._part_hist(salted, ["k", "_s"], n=8)
     assert hs["imbalance_max_over_mean"] < h["imbalance_max_over_mean"]
+
+
+def test_scale_probe_run_refreshes_stale_artifact(tmp_path, monkeypatch):
+    """run() merges into an existing artifact: the top-level metadata
+    must describe THIS run, and an old-format file without "rows" must
+    not raise."""
+    import json
+
+    sp = _load("scale_probe")
+    art = tmp_path / "probe.json"
+    art.write_text(json.dumps({"probe_dir": "/stale/dir", "passes": 9}))
+    monkeypatch.setattr(sp, "ART", str(art))
+    monkeypatch.setattr(sp, "_time_one", lambda name, cores: float(cores))
+    sp.run([8, 32])
+    out = json.loads(art.read_text())
+    assert out["probe_dir"] == sp.OUT_DIR
+    assert out["passes"] == 2
+    assert set(out["rows"]) == set(sp.QUERIES)
+    for row in out["rows"].values():
+        assert row == {"c8": 8.0, "c32": 32.0, "ratio_8_over_32": 0.25}

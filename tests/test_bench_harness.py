@@ -10,16 +10,21 @@ a ``bit_xor(xxhash64(*all_columns))`` aggregate, which makes every
 output column — and hence every join, window, and measure that feeds
 one — impossible to prune. This module pins both halves: the count()
 failure mode still exists (so the fix stays motivated), and the hash
-evaluator provably preserves the plan for every headline row.
+evaluator (``harness.hash_frame``) provably preserves the plan for
+every headline row. It also pins that the timing scripts share that
+one harness, and the ``get_spark`` conf precedence the harness's
+session relies on.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
-from pyspark.sql import functions as F
+import pytest
 
 import bench
+import harness
 from twitter_analysis_spark import catalog
 
 #: Rows the round-7 audits caught under-timed by the count() evaluator
@@ -35,12 +40,6 @@ KNOWN_COUNT_PRUNED = [
 def _shape(df) -> tuple[int, int, int]:
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     return (plan.count("Join"), plan.count("Window"), plan.count("sum("))
-
-
-def _hash_eval(df):
-    """The exact evaluation bench.run() performs for non-top-k rows."""
-    return (df.select(F.xxhash64(*[F.col(c) for c in df.columns])
-                      .alias("h")).agg(F.expr("bit_xor(h)")))
 
 
 def test_count_evaluator_still_prunes_known_rows(spark, sf_dir):
@@ -64,7 +63,7 @@ def test_hash_evaluator_keeps_q1_measures(spark, sf_dir):
     df = catalog.QUERIES["q1_pricing_summary"](spark, sf_dir)
     _, _, s_full = _shape(df)
     _, _, s_cnt = _shape(df.groupBy().count())
-    _, _, s_hash = _shape(_hash_eval(df))
+    _, _, s_hash = _shape(harness.hash_frame(df))
     assert s_cnt < s_full <= s_hash
 
 
@@ -80,7 +79,7 @@ def test_hash_evaluator_preserves_every_headline_plan(spark, sf_dir):
             continue
         df = fn(spark, sf_dir)
         jf, wf, _ = _shape(df)
-        jh, wh, _ = _shape(_hash_eval(df))
+        jh, wh, _ = _shape(harness.hash_frame(df))
         if jh < jf or wh < wf:
             offenders.append(name)
         spark.catalog.clearCache()
@@ -223,3 +222,49 @@ def test_every_streaming_shape_has_a_streaming_record():
         "BASELINE_RECORDS.json")))["streaming_records"]
     assert sorted(emitted - set(records)) == []
     assert sorted(set(records) - emitted) == []
+
+
+def test_timing_scripts_share_one_harness():
+    """The session conf and the evaluator exist once, in harness.py:
+    no timing script re-types the retention conf or the hash
+    evaluator, so no two timing scripts can drift into measuring
+    different things."""
+    root = os.path.dirname(bench.__file__)
+    paths = [os.path.join(root, "bench.py"),
+             os.path.join(root, "bench_streaming.py"),
+             *glob.glob(os.path.join(root, "tools", "*.py"))]
+    copies = [(os.path.relpath(p, root), needle)
+              for p in paths for needle in ("spark.ui.retainedTasks",
+                                            "bit_xor(")
+              if needle in open(p).read()]
+    assert copies == [], copies
+    src = open(harness.__file__).read()
+    assert src.count("spark.ui.retainedTasks") == 1
+    assert src.count("bit_xor(") == 1
+
+
+def test_env_conf_does_not_override_explicit(monkeypatch):
+    """An ambient SPARK_GRAFT_EXTRA_CONF must not override the caller's
+    explicit extra_conf — harness.session passes its retention conf
+    that way (r15 ADVICE)."""
+    from twitter_analysis_spark import session as sess
+
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF",
+                       '{"spark.sql.shuffle.partitions": "7"}')
+    # getOrCreate returns the live session; conf application order is
+    # what we pin, via the builder's options rather than a new JVM.
+    with pytest.warns(UserWarning, match="caller wins"):
+        sp = sess.get_spark(
+            "conf_order_test",
+            extra_conf={"spark.sql.shuffle.partitions": "8"})
+    # session already exists (tests fixture) -> builder applies conf
+    # onto it; explicit caller value must win over the env JSON
+    assert sp.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_env_conf_bad_json_names_the_var(monkeypatch):
+    from twitter_analysis_spark import session as sess
+
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "{not json")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_EXTRA_CONF"):
+        sess.get_spark("conf_bad_json_test")

@@ -4,6 +4,8 @@ ANN recall is bounded below."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -183,6 +185,27 @@ def test_vectorized_cosine_matches_expression(spark, sf_dir):
     vect = similarity.cosine_topk_vectorized(emb, qvec, 10).collect()
     assert [(r["vec_id"], r["cosine"]) for r in expr] == \
            [(r["vec_id"], r["cosine"]) for r in vect]
+
+
+def test_eager_barrier_env_gate(spark, tmp_path, monkeypatch):
+    """SPARK_GRAFT_CHECKPOINT_DIR flips the minhash barriers from
+    localCheckpoint (executor-local) to a reliable checkpoint()."""
+    df = spark.range(10).toDF("x")
+
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    local = dedup.eager_barrier(df)
+    assert local.rdd.getNumPartitions() >= 1
+    assert "LogicalRDD" in local._jdf.queryExecution().logical().toString()
+
+    ckdir = str(tmp_path / "ck")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
+    reliable = dedup.eager_barrier(spark.range(10).toDF("x"))
+    assert reliable.count() == 10
+    # reliable checkpoint writes RDD blocks under the configured dir
+    found = []
+    for root, _dirs, files in os.walk(ckdir):
+        found.extend(files)
+    assert found, "reliable checkpoint() wrote nothing under the env dir"
 
 
 def test_connected_components_merges_chains(spark):

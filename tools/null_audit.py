@@ -35,8 +35,6 @@ SRC = os.environ.get("SPARK_GRAFT_NULL_SRC", "/root/testdata/sf0.001")
 # the default had passed by luck — denser nulls compound interactions,
 # so rerun with SPARK_GRAFT_NULL_RATE=10 after any contract change).
 RATE = int(os.environ.get("SPARK_GRAFT_NULL_RATE", "50"))
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 def main() -> None:
@@ -53,7 +51,7 @@ def main() -> None:
 
     dst = tempfile.mkdtemp(prefix="nulldata_")
     try:
-        inject_nulls(spark, SRC, dst, rate=RATE, tables=TABLES)
+        inject_nulls(spark, SRC, dst, rate=RATE)
 
         qs = E.queries()
         osql = E.oracle_sql()

@@ -23,41 +23,24 @@ so a future DuckDB upgrade or a new window row fails loudly.
 
 from __future__ import annotations
 
-import datetime as dt
 import hashlib
 import json
-import math
 import os
 import re
 import shutil
 import sys
 import tempfile
-from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# parity's own cell normalisation, so the hash reflects what the driver sees
+from tests.parity import _norm, duck_connection, inject_nulls  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_NULL_SRC", "/root/testdata/sf0.001")
 RATE = int(os.environ.get("SPARK_GRAFT_NULL_RATE", "10"))
 RUNS = int(os.environ.get("SPARK_GRAFT_STAB_RUNS", "6"))
 TAG = os.environ.get("SPARK_GRAFT_STAB_TAG", "")
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 WINDOW_RE = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
-
-
-def _norm(v):
-    # mirror tests/parity._norm so the hash reflects what the driver sees
-    if isinstance(v, Decimal):
-        return float(v)
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat(sep=" ", timespec="microseconds")
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else v
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    return v
 
 
 def _hash_result(cols, rows) -> str:
@@ -70,7 +53,6 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
-    from tests.parity import duck_connection, inject_nulls
 
     osql = E.oracle_sql()
     only = set(sys.argv[1:])
@@ -94,7 +76,7 @@ def main() -> int:
     report = {"src": SRC, "rate": RATE, "runs": RUNS, "oracles": {}}
     unstable = []
     try:
-        inject_nulls(spark, SRC, dst, rate=RATE, tables=TABLES)
+        inject_nulls(spark, SRC, dst, rate=RATE)
         for name, sql in sorted(targets.items()):
             hashes, err = [], None
             for _ in range(RUNS):

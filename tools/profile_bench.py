@@ -3,16 +3,16 @@ query's wall clock into DataFrame-construction time (Catalyst plan
 building over py4j) vs execution time (the bench evaluator), and
 counts the Spark jobs each evaluation launches.
 
-Methodology mirrors bench.py exactly (same session config, same
-evaluator, warmup pass, min of N timed passes) so the numbers are
-comparable with BENCH_*.json rows; this harness only ADDS the
-construction/execution split and the job counts. Not a replacement
-for bench.py — a diagnosis tool (guide §1).
+Session, evaluator and warm-up/min-of-2 loop are bench.py's (the
+shared harness.py), so the numbers are comparable with BENCH_*.json
+rows; this tool only ADDS the construction/execution split and the
+job counts. Not a replacement for bench.py — a diagnosis tool
+(guide §1).
 
 Usage:
   BENCH_QUERIES=graph_pagerank,dedup_clusters_star python tools/profile_bench.py
 Env knobs identical to bench.py (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS),
-plus PROFILE_PASSES (default 2) and PROFILE_OUT (json path).
+plus PROFILE_OUT (json path).
 """
 
 from __future__ import annotations
@@ -24,76 +24,37 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-PASSES = int(os.environ.get("PROFILE_PASSES", "2"))
+import harness  # noqa: E402
+
 OUT = os.environ.get("PROFILE_OUT", "")
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     import bench
-    from twitter_analysis_spark import catalog
-    from twitter_analysis_spark.session import get_spark
 
-    extra = bench._extra_queries()
-    names = os.environ.get("BENCH_QUERIES")
-    names = (names.split(",") if names
-             else [n for n in bench.HEADLINE
-                   if n in catalog.QUERIES or n in extra])
-
-    spark = get_spark(app_name="profile_bench", master=f"local[{CPUS}]",
-                      extra_conf={"spark.driver.memory": "16g",
-                                  "spark.ui.enabled": "false",
-                                  "spark.sql.ui.retainedExecutions": "2",
-                                  "spark.ui.retainedJobs": "20",
-                                  "spark.ui.retainedStages": "50",
-                                  "spark.ui.retainedTasks": "500",
-                                  "spark.ui.dagGraph.retainedRootRDDs": "10",
-                                  "spark.cleaner.periodicGC.interval": "30s"})
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm_system = spark.sparkContext._jvm.System
+    fns = bench.rows()
+    spark = harness.session("profile_bench")
     dag = spark.sparkContext._jsc.sc().dagScheduler()
 
-    def evaluate(df, name: str) -> None:
-        if name.startswith(("t1", "t6", "flagship", "q3", "a2", "sim")):
-            df.collect()
-        else:
-            (df.select(F.xxhash64(*[F.col(c) for c in df.columns])
-                       .alias("h")).agg(F.expr("bit_xor(h)")).collect())
-        spark.catalog.clearCache()
-
     def profile(name: str) -> dict:
-        fn = extra[name] if name in extra else catalog.QUERIES[name]
         n0 = dag.numTotalJobs()
         t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
+        df = fns[name](spark, harness.SF_DIR)
         t1 = time.perf_counter()
-        evaluate(df, name)
+        harness.evaluate(df, name)
         t2 = time.perf_counter()
-        n1 = dag.numTotalJobs()
         return {"construct_sec": round(t1 - t0, 3),
                 "exec_sec": round(t2 - t1, 3),
                 "total_sec": round(t2 - t0, 3),
-                "n_jobs": n1 - n0}
+                "n_jobs": dag.numTotalJobs() - n0}
 
-    # warmup (untimed, same as bench.py)
-    for name in names:
-        fn = extra[name] if name in extra else catalog.QUERIES[name]
-        evaluate(fn(spark, SF_DIR), name)
+    results = {name: {k: r[k] for k in ("construct_sec", "exec_sec",
+                                        "total_sec", "n_jobs")}
+               for name, r in harness.best_of(spark, list(fns),
+                                              profile).items()}
 
-    results: dict[str, dict] = {}
-    jvm_system.gc()
-    for _ in range(PASSES):
-        for name in names:
-            r = profile(name)
-            prev = results.get(name)
-            if prev is None or r["total_sec"] < prev["total_sec"]:
-                results[name] = r
-            jvm_system.gc()
-
-    out = {"sf_dir": SF_DIR, "cpus": CPUS, "passes": PASSES,
+    out = {"sf_dir": harness.SF_DIR, "cpus": harness.CPUS,
+           "passes": harness.PASSES,
            "total_sec": round(sum(r["total_sec"]
                                   for r in results.values()), 3),
            "construct_sec": round(sum(r["construct_sec"]

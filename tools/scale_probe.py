@@ -16,9 +16,10 @@ each replica's internal structure while keeping replicas disjoint:
   skew-heavier (more adversarial) regime for the graph tier.
 
 Then it times the heavy tier (dedup_clusters_star, dedup_minhash_lsh,
-graph_triangles, graph_pagerank) through the noop sink at
-local[8] and local[32], fresh session per (query, cores), min of
-PASSES timed runs, and writes artifacts/SCALE_PROBE_r16.json.
+graph_triangles, graph_pagerank) through bench.py's evaluator at
+local[8] and local[32], fresh interpreter and session per (query,
+cores), warm-up + min of harness.PASSES timed runs (harness.py), and
+writes artifacts/SCALE_PROBE_r16.json.
 j9-style skew scaling is covered separately by tools/skew_bench.py
 (planted-skew A/B, r15).
 
@@ -32,14 +33,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import harness  # noqa: E402
+
+SRC = harness.SF_DIR
 OUT_DIR = os.environ.get("SCALE_PROBE_DIR", "/root/scale_probe/sf1")
 REPLICAS = 10
-PASSES = int(os.environ.get("PROBE_PASSES", "2"))
+#: tables gen() scales; every other table in SRC is copied as-is
+SCALED = ("documents", "events")
 QUERIES = ["graph_pagerank", "graph_triangles",
            "dedup_minhash_lsh", "dedup_clusters_star"]
 ART = os.environ.get(
@@ -89,24 +92,28 @@ def gen(replicas: int) -> None:
         os.path.join(OUT_DIR, "events.parquet"))
 
     # remaining tables: straight copies so load_table never misses
-    for t in ["customer", "embeddings", "lineitem", "nation", "orders",
-              "part", "region", "supplier"]:
-        spark.read.parquet(os.path.join(SRC, f"{t}.parquet")) \
-            .write.mode("overwrite").parquet(
-                os.path.join(OUT_DIR, f"{t}.parquet"))
+    for f in sorted(os.listdir(SRC)):
+        t, ext = os.path.splitext(f)
+        if ext != ".parquet" or t in SCALED:
+            continue
+        spark.read.parquet(os.path.join(SRC, f)) \
+            .write.mode("overwrite").parquet(os.path.join(OUT_DIR, f))
     print("generated", OUT_DIR)
 
 
 def run(cores_list: list[int]) -> None:
-    results: dict = {"probe_dir": OUT_DIR, "passes": PASSES, "rows": {}}
+    results: dict = {}
     if os.path.exists(ART):
-        results = json.load(open(ART))
+        with open(ART) as f:
+            results = json.load(f)
+    results.update(probe_dir=OUT_DIR, passes=harness.PASSES)
+    rows = results.setdefault("rows", {})
     for cores in cores_list:
         for name in QUERIES:
             sec = _time_one(name, cores)
-            results["rows"].setdefault(name, {})[f"c{cores}"] = sec
+            rows.setdefault(name, {})[f"c{cores}"] = sec
             print(f"{name} c{cores}: {sec:.2f}s", flush=True)
-    for name, row in results["rows"].items():
+    for row in rows.values():
         if "c8" in row and "c32" in row:
             row["ratio_8_over_32"] = round(row["c8"] / row["c32"], 3)
     with open(ART, "w") as f:
@@ -115,38 +122,26 @@ def run(cores_list: list[int]) -> None:
 
 
 def _time_one(name: str, cores: int) -> float:
-    """Fresh interpreter per (query, cores) so JVM state can't leak
-    between core counts; min of PASSES inside."""
-    import subprocess
+    """Fresh interpreter (and so fresh JVM) per (query, cores) so JVM
+    state can't leak between core counts."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
 
-    code = f"""
-import sys, time, json
-sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
-from twitter_analysis_spark import catalog
-from twitter_analysis_spark.session import get_spark
-spark = get_spark("scale_probe", master="local[{cores}]",
-                  extra_conf={{"spark.driver.memory": "24g",
-                              "spark.ui.enabled": "false",
-                              "spark.sql.ui.retainedExecutions": "2"}})
-spark.sparkContext.setLogLevel("ERROR")
-best = None
-for p in range({PASSES} + 1):   # pass 0 = warmup
-    spark.catalog.clearCache()
-    t0 = time.time()
-    df = catalog.QUERIES[{name!r}](spark, {OUT_DIR!r})
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    if p > 0:
-        best = dt if best is None else min(best, dt)
-print("PROBE_SEC", best)
-"""
-    out = subprocess.run([sys.executable, "-c", code],
-                         capture_output=True, text=True, timeout=3600)
-    for line in out.stdout.splitlines():
-        if line.startswith("PROBE_SEC"):
-            return float(line.split()[1])
-    raise RuntimeError(f"probe failed for {name} c{cores}:\n"
-                       f"{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
+    with ProcessPoolExecutor(
+            1, mp_context=multiprocessing.get_context("spawn")) as pool:
+        return pool.submit(_probe, name, cores).result()
+
+
+def _probe(name: str, cores: int) -> float:
+    from twitter_analysis_spark import catalog
+
+    spark = harness.session("scale_probe", cores,
+                            {"spark.driver.memory": "24g"})
+
+    def timed(n: str) -> None:
+        harness.evaluate(catalog.QUERIES[n](spark, OUT_DIR), n)
+
+    return harness.best_of(spark, [name], timed)[name]["min_sec"]
 
 
 if __name__ == "__main__":

@@ -43,10 +43,10 @@ the guarded plan against the naive one on identical parquet files:
    defaults) vs guards off (both None).
 
 Timing: each variant warms its plan shape once untimed, then takes
-min-of-2 timed runs through bench.py's bit_xor(xxhash64(*cols))
-evaluator (every output column load-bearing); cache cleared and the
-JVM GC'd between runs. Inputs are written to parquet first so every
-variant reads identical files.
+min-of-2 timed runs through bench.py's hash evaluator (every output
+column load-bearing); cache cleared and the JVM GC'd between runs —
+all three from harness.py, in bench.py's session. Inputs are written
+to parquet first so every variant reads identical files.
 
 Run: python tools/skew_bench.py            (~4 min quiet box)
      SPARK_GRAFT_SKEW_TAG=r15 python tools/skew_bench.py
@@ -60,40 +60,35 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import harness  # noqa: E402
+
+SF_DIR = harness.SF_DIR
 TAG = os.environ.get("SPARK_GRAFT_SKEW_TAG", "")
-REP = int(os.environ.get("SPARK_GRAFT_SKEW_REP", "50"))
+#: events amplification factor (≈5M rows from sf0.1's 100k)
+REP = 50
 #: hot-key profiles measured: ~30% (the verdict's spec — a strong
 #: power-law head) and ~90% (pathological, where even a 32-core local
 #: box feels the straggler in wall clock)
 HOT_PROFILES = (3, 9)
 N_SALTS = 16
-CLUSTER = int(os.environ.get("SPARK_GRAFT_SKEW_CLUSTER", "1500"))
+#: planted near-identical LSH cluster size
+CLUSTER = 1500
 N_SHUFFLE = 32
 
 
 def _hash_all(df):
-    from pyspark.sql import functions as F
-    return (df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("h"))
-            .agg(F.expr("bit_xor(h)")).collect()[0][0])
+    return harness.evaluate(df)[0][0]
 
 
-def _timed(spark, build_fn, runs: int = 2) -> dict:
-    """Warm once untimed, then min-of-`runs` through the hash evaluator."""
-    _hash_all(build_fn())          # plan-shape warmup (codegen compile)
-    spark.catalog.clearCache()
-    times = []
-    for _ in range(runs):
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.monotonic()
-        _hash_all(build_fn())
-        times.append(round(time.monotonic() - t0, 3))
-        spark.catalog.clearCache()
-    return {"runs": times, "min_sec": min(times)}
+def _timed(spark, build_fn) -> dict:
+    """Warm once untimed, then min-of-2 through the hash evaluator."""
+    def run(_: str) -> None:
+        harness.evaluate(build_fn())
+
+    return harness.best_of(spark, ["v"], run)["v"]
 
 
 def _conf(spark, aqe: bool, skew_join: bool) -> None:
@@ -127,6 +122,15 @@ def _part_hist(df, keys, n: int = N_SHUFFLE) -> dict:
     mean = sum(counts) / n
     return {"max_rows": max(counts), "mean_rows": int(mean),
             "imbalance_max_over_mean": round(max(counts) / mean, 2)}
+
+
+def _count_sum(df, key: str):
+    """Row count + exact (decimal) value sum per ``key``."""
+    from pyspark.sql import functions as F
+    return (df.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.sum(F.col("value").cast("decimal(18,2)"))
+                 .cast("double").alias("s")))
 
 
 def build_skewed_events(spark, dst: str, tenths: int, sub: str) -> dict:
@@ -167,29 +171,20 @@ def bench_join(spark, dst: str, sub: str, report: dict) -> None:
             .select(F.col("c_custkey").alias("user_id"), "c_mktsegment"))
 
     def plain():
-        return (facts.join(cust, "user_id")
-                .groupBy("c_mktsegment")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double").alias("s")))
+        return _count_sum(facts.join(cust, "user_id"), "c_mktsegment")
 
     def salted():
-        j = salted_join(facts, cust, on="user_id",
-                        row_cols=["event_id"], n_salts=N_SALTS)
-        return (j.groupBy("c_mktsegment")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double").alias("s")))
+        return _count_sum(salted_join(facts, cust, on="user_id",
+                                      row_cols=["event_id"],
+                                      n_salts=N_SALTS), "c_mktsegment")
 
     def split():
         from twitter_analysis_spark.operators.skew import skew_split_join
-        j = skew_split_join(facts, cust, on="user_id",
-                            row_cols=["event_id"], n_salts=N_SALTS,
-                            hot_threshold=500_000)
-        return (j.groupBy("c_mktsegment")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double").alias("s")))
+        return _count_sum(skew_split_join(facts, cust, on="user_id",
+                                          row_cols=["event_id"],
+                                          n_salts=N_SALTS,
+                                          hot_threshold=500_000),
+                          "c_mktsegment")
 
     _conf(spark, aqe=False, skew_join=False)
     assert _hash_all(plain()) == _hash_all(salted()), \
@@ -204,18 +199,14 @@ def bench_join(spark, dst: str, sub: str, report: dict) -> None:
         "_salt", F.pmod(F.xxhash64("event_id"), F.lit(N_SALTS)))
     tiers["partition_imbalance_salted"] = _part_hist(
         salted_keys, ["user_id", "_salt"])
-    _conf(spark, aqe=False, skew_join=False)
-    tiers["plain_smj_no_aqe"] = _timed(spark, plain)
-    _conf(spark, aqe=True, skew_join=True)
-    tiers["plain_smj_aqe_skewjoin"] = _timed(spark, plain)
-    _conf(spark, aqe=False, skew_join=False)
-    tiers[f"salted_join_{N_SALTS}"] = _timed(spark, salted)
-    _conf(spark, aqe=True, skew_join=True)
-    tiers[f"salted_join_{N_SALTS}_aqe"] = _timed(spark, salted)
-    _conf(spark, aqe=False, skew_join=False)
-    tiers[f"split_join_{N_SALTS}"] = _timed(spark, split)
-    _conf(spark, aqe=True, skew_join=True)
-    tiers[f"split_join_{N_SALTS}_aqe"] = _timed(spark, split)
+    for label, fn, aqe in (("plain_smj_no_aqe", plain, False),
+                           ("plain_smj_aqe_skewjoin", plain, True),
+                           (f"salted_join_{N_SALTS}", salted, False),
+                           (f"salted_join_{N_SALTS}_aqe", salted, True),
+                           (f"split_join_{N_SALTS}", split, False),
+                           (f"split_join_{N_SALTS}_aqe", split, True)):
+        _conf(spark, aqe=aqe, skew_join=aqe)
+        tiers[label] = _timed(spark, fn)
     report["join"] = tiers
 
 
@@ -250,10 +241,7 @@ def bench_agg(spark, dst: str, sub: str, report: dict) -> None:
                       .agg(F.flatten(F.collect_list("vs")).alias("vs")))
 
     def plain_sum():
-        return (facts.groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double").alias("s")))
+        return _count_sum(facts, "user_id")
 
     def salted_sum():
         part = (facts.withColumn(
@@ -330,15 +318,7 @@ def bench_lsh(spark, dst: str, report: dict) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (SparkSession.builder.master(
-                 f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = harness.session("skew_bench")
 
     dst = tempfile.mkdtemp(prefix="skewdata_")
     report: dict = {"sf_dir": SF_DIR, "rep": REP, "n_salts": N_SALTS}

@@ -308,17 +308,6 @@ def _jaccard_pairs_from(ds: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       n: int = 3, num_hashes: int = 32,
-                       max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF) -> DataFrame:
-    """k-permutation MinHash signature per document.
-
-    Output: (id, sig array<long> of length k)."""
-    return _signatures_from(
-        doc_shingle_pairs(df, id_col, text_col, n, max_shingle_df),
-        num_hashes)
-
-
 def _signatures_from(ds: DataFrame, num_hashes: int,
                      hash_fn: str = "xxhash64") -> DataFrame:
     """MinHash signatures from a distinct (doc, shingle) table.
@@ -661,8 +650,8 @@ def embedding_near_dup_pairs(emb: DataFrame, id_col: str, vec_col: str,
 
     emb = _sim_guard.valid_vectors(emb, id_col, vec_col)
 
-    # similarity's shared fold kernels (see sim.UNROLL_DIM for why the
-    # unrolled variant is disabled). Norms are hoisted to per-VECTOR
+    # similarity's shared fold kernels (see OPTIMIZATION_r16.md for why
+    # the unrolled variant is not used). Norms are hoisted to per-VECTOR
     # columns on each join side (r16, guide §4): the per-pair cosine
     # used to re-run both sumsq folds for every candidate pair — 3
     # interpreted 64-element folds per pair, the dominant cost of this
@@ -1252,7 +1241,7 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
     # test below is one dot fold + a scalar divide instead of three
     # folds — same sqrt(dot(v,v)) arithmetic, bit-identical cosines.
     # (norm/dot are similarity's shared fold kernels; see
-    # sim.UNROLL_DIM for why the unrolled variant is disabled.)
+    # OPTIMIZATION_r16.md for why the unrolled variant is not used.)
     asg = (sim.ivf_assign(emb, cents, id_col, vec_col, with_cos=True)
            .select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"),
                    "cell", F.col("cell_cos").alias("cc"),

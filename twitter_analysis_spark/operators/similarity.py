@@ -37,65 +37,19 @@ def valid_vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
                      & F.col(vec_col).isNotNull())
 
 
-#: DISABLED (r16, measured): unrolling ``dot``/``l2norm`` into 64-term
-#: ``element_at`` add-chains (to escape the interpreted HOF fold,
-#: guide §4.1) is bit-identical and ~2x faster in a single-column
-#: micro-bench, but a 5-12x REGRESSION on every real similarity query
-#: (interleaved A/B at sf0.1: sim_kmeans_ivf 2.4->33.5 s,
-#: dedup_semantic 4.5->56 s, dedup_embedding_cosine 44->106 s,
-#: sim_cosine_topk 0.31->2.1 s, sim_knn_join 0.87->3.0 s; both passes
-#: agree). Those operators instantiate the kernel per centroid / per
-#: candidate pair, so the ~130-node chain multiplies into
-#: thousands-of-node projections: Catalyst analysis/codegen blows up
-#: and generated methods spill past JIT limits. The fold is one
-#: O(dim) interpreted loop per value and stays the default. Do not
-#: re-enable without an interleaved A/B on the five queries above.
-UNROLL_DIM: int | None = None
-
-
-def _add_chain(terms: list[Column]) -> Column:
-    """((0.0 + t1) + t2) + ... — the left fold, spelled out."""
-    s: Column = F.lit(0.0)
-    for t in terms:
-        s = s + t
-    return s
-
-
-def _dot_fold(a: Column, b: Column) -> Column:
+def dot(a: Column, b: Column) -> Column:
+    """Sequential-fold double dot product of two array columns. (An
+    unrolled ``element_at`` add-chain was measured 5-12x slower on the
+    real similarity queries — OPTIMIZATION_r16.md.)"""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _sumsq_fold(a: Column) -> Column:
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold double dot product of two array columns
-    (unrolled to a codegen'd add-chain at the standard width — see
-    UNROLL_DIM; bit-identical either path)."""
-    if UNROLL_DIM is None:
-        return _dot_fold(a, b)
-    d = UNROLL_DIM
-    unrolled = _add_chain([
-        F.element_at(a, i + 1).cast("double")
-        * F.element_at(b, i + 1).cast("double") for i in range(d)])
-    return F.when((F.size(a) == d) & (F.size(b) == d), unrolled) \
-        .otherwise(_dot_fold(a, b))
-
-
 def l2norm(a: Column) -> Column:
-    if UNROLL_DIM is None:
-        return F.sqrt(_sumsq_fold(a))
-    d = UNROLL_DIM
-    unrolled = _add_chain([
-        F.element_at(a, i + 1).cast("double")
-        * F.element_at(a, i + 1).cast("double") for i in range(d)])
-    return F.sqrt(F.when(F.size(a) == d, unrolled)
-                  .otherwise(_sumsq_fold(a)))
+    return F.sqrt(F.aggregate(
+        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x))
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -309,20 +263,27 @@ def ivf_assign(emb: DataFrame, centroids: list[tuple[int, list[float]]],
             .select(*cols))
 
 
-def ivf_topk(emb: DataFrame, centroids: list[tuple[int, list[float]]],
-             query_vec: list[float], k: int = 10, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Approximate top-k: exact cosine inside the nprobe cells whose
-    centroids are nearest the query."""
-
+def _nearest_cells(centroids: list[tuple[int, list[float]]],
+                   query_vec: list[float], nprobe: int) -> list[int]:
+    """Driver-side: ids of the ``nprobe`` centroids with the highest
+    cosine to the query (a zero-norm centroid or query scores 0.0)."""
     def pycos(a: list[float], b: list[float]) -> float:
         num = sum(x * y for x, y in zip(a, b))
         da = sum(x * x for x in a) ** 0.5
         db = sum(x * x for x in b) ** 0.5
         return num / (da * db) if da and db else 0.0
 
-    probe = [cid for cid, _ in sorted(
+    return [cid for cid, _ in sorted(
         centroids, key=lambda c: -pycos(c[1], query_vec))[:nprobe]]
+
+
+def ivf_topk(emb: DataFrame, centroids: list[tuple[int, list[float]]],
+             query_vec: list[float], k: int = 10, nprobe: int = 2,
+             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Approximate top-k: exact cosine inside the nprobe cells whose
+    centroids are nearest the query."""
+
+    probe = _nearest_cells(centroids, query_vec, nprobe)
     q = F.array([F.lit(float(x)) for x in query_vec])
     return (
         ivf_assign(emb, centroids, id_col, vec_col)
@@ -803,14 +764,7 @@ def ivf_probe(spark, path: str, centroids: list[tuple[int, list[float]]],
     from the (tiny, constant) centroid list, partition-pruned read of
     those cells, exact cosine within."""
 
-    def pycos(a: list[float], b: list[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        da = sum(x * x for x in a) ** 0.5
-        db = sum(x * x for x in b) ** 0.5
-        return num / (da * db) if da and db else 0.0
-
-    probe = [cid for cid, _ in sorted(
-        centroids, key=lambda c: -pycos(c[1], query_vec))[:nprobe]]
+    probe = _nearest_cells(centroids, query_vec, nprobe)
     q = F.array([F.lit(float(x)) for x in query_vec])
     return (
         spark.read.parquet(path)
